@@ -234,14 +234,22 @@ class LakeTable(val root: String, spark: SparkSession,
 
   /** Apply a snapshot's merge-on-read delete files to a data scan: a row
     * survives iff NO delete entry for its key carries a strictly newer
-    * (seq, commit). The per-key delete maximum is one small aggregate
-    * over the delete files (churn since the last compaction, NOT table
-    * size), joined back by key — size-based planning broadcasts it in
-    * the common case, and AQE handles the adversarial huge-churn case as
-    * a shuffle join rather than an OOM. The winner row itself always
-    * survives: its (seq, commit) EQUALS its own delete entry's, and the
-    * predicate keeps `>=`. No-op when the snapshot has no delete files
-    * (pure copy-on-write history).
+    * (seq, commit). That is one `left_anti` join of the data scan
+    * against the raw delete entries, on key equality plus
+    * `(d.seq, d.commit) > (seq, commit)`. Struct ordering is total, so
+    * "some entry is newer" ≡ "the per-key maximum is newer" and no
+    * per-key aggregate (and no hash exchange feeding it) is needed. The
+    * winner row itself always survives: its (seq, commit) EQUALS its own
+    * delete entry's, which is not strictly newer.
+    *
+    * The join carries no hint: the delete scan's size is the sum of its
+    * manifest-recorded file bytes, so the static planner builds a
+    * broadcast hash table straight from the delete side while it is
+    * under `spark.sql.autoBroadcastJoinThreshold` (the common case —
+    * churn since the last compaction, NOT table size) and falls back to
+    * a shuffled anti-join for adversarial huge churn rather than an OOM.
+    * No-op when the snapshot has no delete files (pure copy-on-write
+    * history).
     *
     * `scanned` (the data files `data` actually reads, when the caller
     * pruned them — point lookups, incremental feeds) prunes the DELETE
@@ -260,13 +268,11 @@ class LakeTable(val root: String, spark: SparkSession,
     }
     if (dels.isEmpty) data
     else {
-      val dmax = readEntries(dels, LakeTable.deleteSchema)
-        .groupBy(col("repo"), col("path"))
-        .agg(max(struct(col("seq").as("s"), col("commit").as("c"))).as("_dmax"))
-      data.join(dmax, Seq("repo", "path"), "left")
-        .filter(col("_dmax").isNull ||
-          struct(col("seq").as("s"), col("commit").as("c")) >= col("_dmax"))
-        .drop("_dmax")
+      val d = readEntries(dels, LakeTable.deleteSchema).select(
+        col("repo").as("_drepo"), col("path").as("_dpath"),
+        struct(col("seq").as("s"), col("commit").as("c")).as("_dsc"))
+      data.join(d, col("repo") === col("_drepo") && col("path") === col("_dpath") &&
+        col("_dsc") > struct(col("seq").as("s"), col("commit").as("c")), "left_anti")
     }
   }
 
@@ -636,12 +642,12 @@ class LakeTable(val root: String, spark: SparkSession,
     * Between major compactions every MoR micro-batch adds a delete file,
     * and every resolved read opens all of them — after 10^4 batches the
     * read-side footprint is 10^4 tiny files. Consolidation replaces them
-    * with their per-key max (exactly the aggregate [[resolveDeletes]]
-    * computes on every read, materialized once), so reads open ONE
-    * delete file and the manifest shrinks — the Iceberg
-    * rewrite_position_delete_files idea for equality deletes. Table
-    * state is bit-identical: resolveDeletes(max-of-files) ≡
-    * resolveDeletes(consolidated) because max is associative.
+    * with their per-key max, so reads open ONE delete file, the anti-join
+    * in [[resolveDeletes]] builds its hash table from one entry per key
+    * instead of one per superseding batch (fewer rows broadcast), and the
+    * manifest shrinks — the Iceberg rewrite_position_delete_files idea
+    * for equality deletes. Table state is bit-identical: a delete entry
+    * newer than a row exists iff the key's maximum entry is newer.
     *
     * Cost is O(delete churn since the last major compaction), never
     * O(table) — the job a scheduler runs every N micro-batches, with

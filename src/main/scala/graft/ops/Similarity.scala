@@ -65,21 +65,25 @@ object Similarity {
     // planner produced for the `neighbor_id =!= qid` condition
     // disappears. Arithmetic identical to the zip_with Column form
     // (OpsSpec equivalence + q19 oracle); ragged vectors yield NULL
-    // dots like zip_with null-padding.
+    // dots like zip_with null-padding. A query row with a NULL qid is
+    // skipped (it names no ranking); a NULL query vector, or one holding
+    // a NULL element, scores NULL against every neighbor — as does such
+    // a corpus vector.
     val qRows: Array[(Long, Array[Long])] = VectorKernels.withQuantized(
         queries.select(col("qid").cast("long").as("qid"), col("qvec")),
         "qvec", "qq")
-      .select(col("qid"), col("qq")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+      .select(col("qid"), col("qq")).filter(col("qid").isNotNull).collect()
+      .map(r => (r.getLong(0), VectorKernels.longsAt(r, 1)))
     val joined = VectorKernels.withQuantized(
         corpus.select(col(idCol).cast("long").as("neighbor_id"),
           col(vecCol).as("_v")), "_v", "qv").drop("_v")
-      .as[(Long, Array[Long])]
       .mapPartitions { it =>
-        it.flatMap { case (nid, qv) =>
+        it.flatMap { r =>
+          val nid = r.getLong(0)
+          val qv = VectorKernels.longsAt(r, 1)
           qRows.iterator.filter(_._1 != nid).map { case (qid, qq) =>
             val qdot: Option[Long] =
-              if (qv == null || qv.length != qq.length) None
+              if (qv == null || qq == null || qv.length != qq.length) None
               else {
                 var s = 0L
                 var i = 0

@@ -23,8 +23,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, ArrayType, StructType}
   *    `BigDecimal.valueOf` (decimal string) + HALF_UP, NOT the exact
   *    binary value, matching Catalyst's RoundBase;
   *  - integer dot/distance sums are exact longs, NULL when either side
-  *    is NULL or lengths differ (zip_with null-padding semantics);
-  *  - bucket/cell ties and packing mirror the Column forms bit-for-bit.
+  *    is NULL, holds a NULL element, or lengths differ (zip_with
+  *    null-padding semantics);
+  *  - bucket/cell ties and packing mirror the Column forms bit-for-bit
+  *    on well-formed vectors; a ragged or NULL-holding vector gets a
+  *    NULL bucket and cell.
   */
 private[graft] object VectorKernels {
 
@@ -41,88 +44,100 @@ private[graft] object VectorKernels {
   def roundHalfUp(v: Double): Long =
     java.math.BigDecimal.valueOf(v).setScale(0, RoundingMode.HALF_UP).longValue()
 
+  private def quantize1(x: Any): Long =
+    roundHalfUp(x.asInstanceOf[Number].doubleValue() * 1000.0)
+
   /** Append `out` = round(vec·1000) per element (array<long>); NULL vec
-    * ⇒ NULL. ≡ `transform(v, x => round(x.cast(double)*1000).cast(long))`. */
+    * ⇒ NULL, NULL element ⇒ NULL element.
+    * ≡ `transform(v, x => round(x.cast(double)*1000).cast(long))`. */
   def withQuantized(df: DataFrame, vecCol: String, out: String): DataFrame = {
     val vi = df.schema.fieldIndex(vecCol)
     addCol(df, out, ArrayType(LongType)) { r =>
       if (r.isNullAt(vi)) null
       else {
         val v = r.getSeq[Any](vi)
-        val q = new Array[Long](v.length)
-        var i = 0
-        while (i < v.length) {
-          val x = v(i)
-          if (x == null) sys.error(s"null element in $vecCol")
-          q(i) = roundHalfUp(x.asInstanceOf[Number].doubleValue() * 1000.0)
-          i += 1
+        if (v.contains(null)) v.map(x => if (x == null) null else quantize1(x))
+        else {
+          val qs = new Array[Long](v.length)
+          var i = 0
+          while (i < v.length) { qs(i) = quantize1(v(i)); i += 1 }
+          qs
         }
-        q
       }
     }
   }
 
+  /** The long vector at `i` as a primitive array, or null when it is
+    * NULL or holds a NULL element — one null element poisons a
+    * zip_with/aggregate sum, so every integer kernel treats such a
+    * vector as NULL. */
+  private[ops] def longsAt(r: Row, i: Int): Array[Long] =
+    if (r.isNullAt(i)) null
+    else {
+      val v = r.getSeq[Any](i)
+      if (v.contains(null)) null else v.asInstanceOf[scala.collection.Seq[Long]].toArray
+    }
+
   /** Append `out` = Σ aᵢ·bᵢ over long arrays; NULL when either side is
-    * NULL or lengths differ (≡ aggregate(zip_with(a,b,_*_),0,+) whose
-    * null-padding poisons the sum). */
+    * NULL, holds a NULL element, or lengths differ
+    * (≡ aggregate(zip_with(a,b,_*_),0,+) whose null-padding poisons the
+    * sum). */
   def withQdot(df: DataFrame, aCol: String, bCol: String, out: String): DataFrame = {
     val ai = df.schema.fieldIndex(aCol)
     val bi = df.schema.fieldIndex(bCol)
     addCol(df, out, LongType) { r =>
-      if (r.isNullAt(ai) || r.isNullAt(bi)) null
+      val a = longsAt(r, ai)
+      val b = longsAt(r, bi)
+      if (a == null || b == null || a.length != b.length) null
       else {
-        val a = r.getSeq[Long](ai)
-        val b = r.getSeq[Long](bi)
-        if (a.length != b.length) null
-        else {
-          var s = 0L
-          var i = 0
-          while (i < a.length) { s += a(i) * b(i); i += 1 }
-          s
-        }
+        var s = 0L
+        var i = 0
+        while (i < a.length) { s += a(i) * b(i); i += 1 }
+        s
       }
     }
   }
 
   /** Append `out` = packed sign-projection bucket of the quantized
     * vector against `signs` (one ±1 row per plane, MSB-first packing);
-    * NULL for ragged vectors (length ≠ dim) — ≡ [[Similarity.lshBucketQ]]. */
+    * NULL for ragged vectors (length ≠ dim) — ≡ [[Similarity.lshBucketQ]]
+    * — and for vectors holding a NULL element (where the Column form's
+    * null projection falls through `otherwise(0)` into bucket 0). */
   def withBucket(df: DataFrame, qvCol: String, out: String,
       signs: Array[Array[Long]], dim: Int): DataFrame = {
     val vi = df.schema.fieldIndex(qvCol)
     val nPlanes = signs.length
     addCol(df, out, IntegerType) { r =>
-      if (r.isNullAt(vi)) null
+      val v = longsAt(r, vi)
+      if (v == null || v.length != dim) null
       else {
-        val v = r.getSeq[Long](vi)
-        if (v.length != dim) null
-        else {
-          var packed = 0
-          var p = 0
-          while (p < nPlanes) {
-            val row = signs(p)
-            var proj = 0L
-            var i = 0
-            while (i < dim) { proj += v(i) * row(i); i += 1 }
-            if (proj >= 0) packed |= 1 << (nPlanes - 1 - p)
-            p += 1
-          }
-          packed
+        var packed = 0
+        var p = 0
+        while (p < nPlanes) {
+          val row = signs(p)
+          var proj = 0L
+          var i = 0
+          while (i < dim) { proj += v(i) * row(i); i += 1 }
+          if (proj >= 0) packed |= 1 << (nPlanes - 1 - p)
+          p += 1
         }
+        packed
       }
     }
   }
 
   /** Append `out` = nearest centroid id by exact integer squared L2,
     * ties toward the lower cell id — ≡ the `least(struct(d, c))` pick of
-    * [[Similarity.ivfAssign]]. Centroids must be dense in cell order. */
+    * [[Similarity.ivfAssign]]. Centroids must be dense in cell order and
+    * of one length; a vector of another length (ragged) or holding a NULL
+    * element gets a NULL cell, like [[withQdot]]. */
   def withCell(df: DataFrame, qvCol: String, out: String,
       cents: Array[Array[Long]]): DataFrame = {
     val vi = df.schema.fieldIndex(qvCol)
     addCol(df, out, IntegerType) { r =>
-      if (r.isNullAt(vi)) null
+      val v = longsAt(r, vi)
+      if (v == null || cents.exists(_.length != v.length)) null
       else {
-        val v = r.getSeq[Long](vi)
         var best = Long.MaxValue
         var bestC = -1
         var c = 0
@@ -130,8 +145,7 @@ private[graft] object VectorKernels {
           val cv = cents(c)
           var d = 0L
           var i = 0
-          val n = math.min(v.length, cv.length)
-          while (i < n) { val x = v(i) - cv(i); d += x * x; i += 1 }
+          while (i < v.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
           if (d < best) { best = d; bestC = c }
           c += 1
         }

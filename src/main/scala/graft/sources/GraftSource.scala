@@ -37,14 +37,17 @@ import graft.lake.LakeTable
   *    `FileSourceScanExec` whose file list came from the snapshot.
   *
   *  - **Resolving scan** (delete files or a live rename mapping
-  *    present): correctness needs the equality-delete anti-resolution /
-  *    rename coalesce that a bare file scan cannot express, so the
-  *    relation evaluates [[LakeTable.resolveDeletes]] over the
-  *    manifest-pruned file set (a [[PrunedFilteredScan]]; Spark
-  *    re-applies every filter above it, so pruning here is purely an IO
-  *    reduction and cannot change results). Compaction/consolidation
-  *    return the table to the bound-scan path — the scheduler's
-  *    maintenance cadence directly buys back SQL scan speed.
+  *    present): correctness needs the equality-delete anti-join / rename
+  *    coalesce that a bare file scan cannot express, so the relation
+  *    evaluates [[LakeTable.resolveDeletes]] over the manifest-pruned
+  *    file set (a [[PrunedFilteredScan]]; Spark re-applies every filter
+  *    above it, so pruning here is purely an IO reduction and cannot
+  *    change results). The delete side is pruned to files overlapping
+  *    the scanned key ranges and, while small, broadcast into one
+  *    `left_anti` hash join — no aggregate, no exchange of the data
+  *    side. Major compaction returns the table to the bound-scan path;
+  *    consolidation shrinks the delete side each resolving read opens
+  *    and broadcasts.
   *
   * Options: `versionAsOf` (snapshot time travel, ≙ Iceberg
   * `VERSION AS OF`). Incremental consumption needs no option: a

@@ -463,8 +463,8 @@ class LakeMetaSpec extends AnyFunSuite {
     assert(scanned < total) // data side pruned (range-clustered)
     // the DELETE side must prune too: a point read opens only delete
     // files whose repo range overlaps the scanned data files — and the
-    // small per-key delete maximum must come in as a broadcast, never a
-    // shuffle of the data side
+    // small delete side must come in as a broadcast, never a shuffle of
+    // the data side
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     def scanFiles(p: SparkPlan): Seq[String] = p match {
@@ -478,7 +478,41 @@ class LakeMetaSpec extends AnyFunSuite {
     assert(delOpened >= 1 && delOpened < snap.deleteFiles.size,
       s"delete files opened: $delOpened of ${snap.deleteFiles.size}")
     assert(rows.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
-      "delete-max must broadcast against the point read")
+      "the delete side must broadcast against the point read")
+    // every read entry point resolves deletes with one anti-join against
+    // the raw delete entries: no hash exchange anywhere, and no aggregate
+    // over the delete scan
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    val (since, _, _) = lake.readSince(10000 + 3000)
+    val viaSource = spark.read.format("graft").load(lake.root)
+    Seq("lookupKeys" -> rows, "readSince" -> since, "format(graft)" -> viaSource)
+      .foreach { case (name, df) =>
+        assert(df.collect().nonEmpty, name)
+        val plan = df.queryExecution.executedPlan
+        val all = nodes(plan)
+        assert(!all.collect { case a: BaseAggregateExec => a }
+          .exists(a => scanFiles(a).exists(_.contains("-m-delete-"))),
+          s"$name aggregates over the delete scan:\n$plan")
+        assert(!all.exists {
+          case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[HashPartitioning]
+          case _ => false
+        }, s"$name shuffles by hash:\n$plan")
+        assert(all.exists {
+          case j: BroadcastHashJoinExec => j.joinType == LeftAnti
+          case _ => false
+        }, s"$name must broadcast-anti-join the delete side:\n$plan")
+        assert(scanFiles(plan).exists(_.contains("-m-delete-")),
+          s"$name must read delete files")
+      }
   }
 
   test("point lookup: manifest range pruning + parquet blooms on key columns") {

@@ -25,11 +25,12 @@ class LwwPropertySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val genLog: Gen[List[PropEv]] = for {
-    n <- Gen.choose(5, 60)
+  /** Logs of `minN`–`maxN` events over `repos` × `paths` keys. */
+  private def genLogOf(minN: Int, maxN: Int, repos: Int, paths: Int): Gen[List[PropEv]] = for {
+    n <- Gen.choose(minN, maxN)
     evs <- Gen.listOfN(n, for {
-      r <- Gen.choose(0, 4)
-      p <- Gen.choose(0, 3)
+      r <- Gen.choose(0, repos - 1)
+      p <- Gen.choose(0, paths - 1)
       op <- Gen.frequency(6 -> "UPDATE", 2 -> "INSERT", 2 -> "DELETE")
       c <- Gen.hexStr.map(_.take(8).padTo(8, '0'))
       body <- Gen.alphaStr.map(_.take(12))
@@ -39,21 +40,28 @@ class LwwPropertySpec extends AnyFunSuite {
       s"content-$body-$i", i.toLong)
   }
 
+  private val genLog = genLogOf(5, 60, repos = 5, paths = 4)
+
   private def finalState(evs: Seq[PropEv], batches: Seq[Seq[PropEv]]): Set[(String, String, String, String)] = {
     val lake = new LakeTable(TestSpark.tmpDir("prop"), spark)
     val applier = new CdcApplier(lake, spark)
     batches.zipWithIndex.foreach { case (b, i) =>
       if (b.nonEmpty) applier.applyBatch(b.toDF(), s"prop-$i")
     }
-    lake.read().select($"repo", $"path", $"commit", $"content")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
-      .toSet
+    rows(lake.read())
   }
 
-  private def oracle(evs: Seq[PropEv]): Set[(String, String, String, String)] =
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[(String, String, String, String)] =
+    df.select($"repo", $"path", $"commit", $"content").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
+
+  /** Live state after sequential application; `after` keeps only rows
+    * whose winning seq is past that watermark (the incremental feed). */
+  private def oracle(evs: Seq[PropEv], after: Long = Long.MinValue)
+      : Set[(String, String, String, String)] =
     evs.groupBy(e => (e.repo, e.path))
       .map { case (_, g) => g.maxBy(e => (e.seq, e.commit)) }
-      .filter(_.op != "DELETE")
+      .filter(e => e.op != "DELETE" && e.seq > after)
       .map(e => (e.repo, e.path, e.commit, e.content)).toSet
 
   test("∀ logs: single-batch apply matches the sequential oracle; idempotent") {
@@ -65,9 +73,7 @@ class LwwPropertySpec extends AnyFunSuite {
         val v1 = lake.currentVersion.get
         applier.applyBatch(evs.toDF(), "b0") // exact replay → no-op
         assert(lake.currentVersion.get == v1)
-        val got = lake.read().select($"repo", $"path", $"commit", $"content")
-          .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
-        assert(got == oracle(evs))
+        assert(rows(lake.read()) == oracle(evs))
       }
     }
   }
@@ -80,6 +86,47 @@ class LwwPropertySpec extends AnyFunSuite {
         val batches = evs.sortBy(_.seq).grouped(per).toSeq
         assert(finalState(evs, batches) == oracle(evs))
       }
+    }
+  }
+
+  test("∀ logs and batch boundaries: merge-on-read reads match the oracle, broadcast or shuffled, before and after consolidation") {
+    // few keys, long logs: every batch supersedes keys of earlier ones,
+    // so several delete files hold overlapping keys
+    val genMorLog = genLogOf(30, 60, repos = 3, paths = 2)
+    samples(genMorLog.flatMap(e => Gen.choose(3, 5).map((e, _))), 4).foreach { case (evs, nb) =>
+      val lake = new LakeTable(TestSpark.tmpDir("propmor"), spark)
+      val applier = new CdcApplier(lake, spark, mergeOnRead = true)
+      val per = evs.size / nb + 1
+      evs.sortBy(_.seq).grouped(per).zipWithIndex.foreach { case (b, i) =>
+        applier.applyBatch(b.toDF(), s"mor-$i")
+      }
+      val w = evs.size / 2L
+      val keys = evs.map(e => (e.repo, e.path)).distinct // live and deleted keys
+      def check(stage: String): Unit = {
+        assert(rows(lake.read()) == oracle(evs), stage)
+        assert(rows(lake.lookupKeys(keys)._1) == oracle(evs), stage)
+        assert(rows(lake.readSince(w)._1) == oracle(evs, after = w), stage)
+      }
+      def bothJoins(stage: String): Unit = {
+        check(s"$stage, broadcast")
+        val key = "spark.sql.autoBroadcastJoinThreshold"
+        val prev = spark.conf.getOption(key)
+        spark.conf.set(key, "-1")
+        try {
+          val plan = lake.read().queryExecution.executedPlan.toString
+          assert(!plan.contains("BroadcastHashJoin"), s"$stage: expected a shuffled anti-join\n$plan")
+          check(s"$stage, shuffled")
+        } finally prev match {
+          case Some(v) => spark.conf.set(key, v)
+          case None => spark.conf.unset(key)
+        }
+      }
+      assert(lake.currentSnapshot.get.deleteFiles.size >= 2,
+        "several delete files must hold overlapping keys")
+      bothJoins("before consolidation")
+      assert(lake.consolidateDeletes().nonEmpty)
+      assert(lake.currentSnapshot.get.deleteFiles.size == 1)
+      bothJoins("after consolidation")
     }
   }
 

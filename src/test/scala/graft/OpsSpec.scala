@@ -521,4 +521,42 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     assert(colB == kerB)
   }
+  test("vector kernels: a NULL element quantizes to a NULL element and poisons the dot") {
+    val df = Seq((0L, Seq[java.lang.Float](0.0015f, null, 0.25f)),
+      (1L, Seq[java.lang.Float](0.001f, 0.002f, 0.003f))).toDF("id", "v")
+    val q = graft.ops.VectorKernels.withQuantized(df, "v", "q")
+    val got = q.collect().map(r => r.getLong(0) -> r.getSeq[java.lang.Long](2)).toMap
+    assert(got(0L) == Seq[java.lang.Long](2L, null, 250L))
+    assert(got(1L) == Seq[java.lang.Long](1L, 2L, 3L))
+    // the Column form agrees element for element
+    val colQ = df.select($"id", Similarity.quantize($"v").as("q"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[java.lang.Long](1)).toMap
+    assert(colQ == got)
+    val d = graft.ops.VectorKernels.withQdot(q.drop("v"), "q", "q", "d")
+      .collect().map(r => r.getLong(0) -> r.get(2)).toMap
+    assert(d(0L) == null && d(1L) == 14L)
+  }
+
+  test("quantized-dot top-k: NULL qid rows are skipped, NULL query vectors score NULL") {
+    val vecs = (0 until 6).map(i => (i.toLong, Seq(i * 0.1f, 1f - i * 0.1f)))
+      .toDF("vec_id", "embedding")
+    val q = Seq[(java.lang.Long, Seq[java.lang.Float])](
+      (100L, Seq(1f, 0f)), (null, Seq(0f, 1f)), (101L, null), (102L, Seq(null, 1f)))
+      .toDF("qid", "qvec")
+    val out = Similarity.quantizedDotTopK(vecs, "vec_id", "embedding", q, 2)
+      .collect().map(r => (r.getLong(0), r.getInt(2)) -> (r.getLong(1), r.get(3))).toMap
+    assert(out.keySet.map(_._1) == Set(100L, 101L, 102L))
+    assert(out((100L, 1)) == (5L, 500000L)) // largest x wins: 0.5·1000 × 1000
+    assert(out((101L, 1))._2 == null && out((102L, 2))._2 == null)
+    assert(out((101L, 1))._1 == 0L) // all-NULL scores rank by neighbor id
+  }
+
+  test("IVF cell assignment: a ragged vector gets a NULL cell") {
+    val df = Seq((0L, Seq(1L, 2L)), (1L, Seq(1L, 2L, 3L)), (2L, Seq(9L)))
+      .toDF("id", "qv")
+    val cents = Array(Array(0L, 0L), Array(10L, 10L))
+    val cells = graft.ops.VectorKernels.withCell(df, "qv", "cell", cents)
+      .collect().map(r => r.getLong(0) -> r.get(2)).toMap
+    assert(cells == Map(0L -> 0, 1L -> null, 2L -> null))
+  }
 }
