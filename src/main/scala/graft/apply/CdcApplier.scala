@@ -14,14 +14,18 @@ import graft.lake.LakeTable
   * reduce) → atomic snapshot commit.
   *
   * Scale design decisions (for the 1000-executor / 10^10-event case):
-  *  - ONE data shuffle for the MERGE (plus an optional range-cluster
-  *    exchange before the write — see step 6 — that keeps per-file key
-  *    ranges tight so later batches' copy-on-write stays proportional to
-  *    what they touch). The MERGE is not a join: touched base rows ∪
-  *    fenced change events are unioned and reduced by a single hash
-  *    aggregate `max_by(row, (seq, commit, isChange))`. That aggregate IS
-  *    the in-batch LWW dedup and the cross-batch LWW resolution at once —
-  *    map-side partial aggregation shrinks hot keys before the exchange.
+  *  - ONE data shuffle for the MERGE (plus, for outputs above
+  *    `spark.graft.smallWriteRows`, the range-cluster exchange of
+  *    [[LakeTable.writeDataFiles]]'s layout policy, which keeps per-file
+  *    key ranges tight so later batches' copy-on-write stays
+  *    proportional to what they touch; each merge hands the writer the
+  *    output row bound it already knows from batch and manifest stats,
+  *    so small outputs skip that exchange). The MERGE is not a join:
+  *    touched base rows ∪ fenced change events are unioned and reduced
+  *    by a single hash aggregate `max_by(row, (seq, commit, isChange))`.
+  *    That aggregate IS the in-batch LWW dedup and the cross-batch LWW
+  *    resolution at once — map-side partial aggregation shrinks hot keys
+  *    before the exchange.
   *    (Catalyst plans max_by-over-struct as SortAggregate — struct
   *    buffers aren't hash-aggregable — but the partial_max_by below the
   *    exchange is what kills skew; a window row_number would shuffle
@@ -85,7 +89,10 @@ object CdcApplier {
   }
 }
 
-/** @param mergeOnRead write mode for [[CdcApplier.applyBatch]]:
+/** @param clusterPartitions pins the file count of every merge write
+  *   (`0`, the default, leaves the layout to
+  *   [[LakeTable.writeDataFiles]]'s row-bound policy).
+  * @param mergeOnRead write mode for [[CdcApplier.applyBatch]]:
   *   - `false` (copy-on-write): a batch REWRITES every data file whose
   *     key range it touches — reads stay plain scans, but a steady
   *     drizzle of updates across many repos rewrites
@@ -99,24 +106,19 @@ object CdcApplier {
   *     rewrite) folds them away. The Iceberg-v2 trade for streaming CDC
   *     upserts: bounded write amplification per micro-batch, rent paid
   *     in one periodic maintenance job.
-  *   Both modes commit the SAME logical table state — the oracle-gated
-  *   engine queries are indistinguishable across modes. */
+  *   Both modes share the fence, the schema-conform projection, the one
+  *   writer and the lineage-and-commit tail; they differ only in the
+  *   base they read and the shape of what they write. Both commit the
+  *   SAME logical table state — the oracle-gated engine queries are
+  *   indistinguishable across modes. */
 class CdcApplier(lake: LakeTable, spark: SparkSession,
-    clusterWrite: Boolean = true, clusterPartitions: Int = 0,
-    mergeOnRead: Boolean = false) {
+    clusterPartitions: Int = 0, mergeOnRead: Boolean = false) {
 
   import spark.implicits._
 
   /** Columns that never become lake data. */
   private val metaCols = Set("op", "part", "event_id", "schema_ver", "source")
   private val keyCols = CdcApplier.keyCols
-
-  /** See [[CdcApplier.lwwReduce]]. */
-  def lwwReduce(events: DataFrame): DataFrame = CdcApplier.lwwReduce(events)
-
-  /** See [[CdcApplier.saltedLwwReduce]]. */
-  def saltedLwwReduce(events: DataFrame, salts: Int): DataFrame =
-    CdcApplier.saltedLwwReduce(events, salts)
 
   /** Apply one micro-batch of canonical change events. Expected columns:
     * repo, path, seq, op, part, commit, lang, content [+ promoted extras].
@@ -225,67 +227,48 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
         (parts._1.map(_._1), parts._2.map(_._1))
       }.getOrElse((Nil, Nil))
 
-      if (mergeOnRead)
-        morMerge(fenced, snap, evolved, touched, batchId, newOffsets,
-          upserts, deletes, parsedCount, quarantinedCount, lineageExtras,
-          // sparse batch vs table size (both already known: event counts
-          // from the fused stats job, table rows from the manifest):
-          // a drizzle batch semi-joins the base key scan to its key set,
-          // a bulk batch skips the semi-join's own shuffles
-          semiJoinBase = (upserts + deletes) * 8 <
-            snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L))
-      else
-        cowMerge(fenced, snap, evolved, touched, retained, batchId, newOffsets,
-          upserts, deletes, parsedCount, quarantinedCount, lineageExtras)
+      val (keep, added, rowsBefore, rowsAfter) =
+        if (mergeOnRead) morMerge(fenced, snap, evolved, touched, batchId, upserts + deletes)
+        else cowMerge(fenced, snap, evolved, touched, retained, batchId, upserts)
+      // ---- 7. the one commit tail: lineage counters (extras are read
+      // AFTER the merge write, whose jobs they observed) and the atomic
+      // snapshot commit, anchored to the snapshot this batch READ — a
+      // concurrent maintenance commit between that read and this commit
+      // rebases instead of clobbering. ----
+      lake.commit(batchId, newOffsets, evolved, keep, added, Map(
+        "parsed" -> parsedCount, "quarantined" -> quarantinedCount,
+        "upserts" -> upserts, "deletes" -> deletes,
+        "rowsBefore" -> rowsBefore, "rowsAfter" -> rowsAfter) ++ lineageExtras(),
+        baseVersion = snap.map(_.version))
     } finally fenced.unpersist()
   }
 
-  /** Range-cluster a merge output before the write (see step 6 notes in
-    * [[applyBatch]]): each data file gets a TIGHT disjoint (repo, path)
-    * range, so a future batch touching k repos touches O(k/keyspace) of
-    * the table. `clusterPartitions = 0` lets AQE size the range
-    * partitions; an explicit count pins the output file count (AQE won't
-    * coalesce a user-specified numPartitions).
-    *
-    * `estRows` (an upper bound on the output's rows, when the caller
-    * knows one from batch stats) short-circuits SMALL outputs to
-    * `coalesce(1)`: one output partition is trivially range-disjoint and
-    * [[graft.lake.LakeTable.writeDataFiles]] sorts within partitions
-    * anyway, so the file keeps tight key stats — while skipping the
-    * RangePartitioner's SAMPLING pass, which executes the whole merge
-    * subtree one extra time per micro-batch. Threshold
-    * `spark.graft.smallWriteRows` (default 262144 — a single write task
-    * sorting ≲100 MB); production bulk batches exceed it and keep the
-    * parallel range path. */
-  private def clusterForWrite(df: DataFrame, estRows: Long = Long.MaxValue): DataFrame =
-    if (!clusterWrite) df
-    else if (clusterPartitions > 0) // explicit file-count pin always wins
-      df.repartitionByRange(clusterPartitions, col("repo"), col("path"))
-    else if (estRows <= spark.conf.get("spark.graft.smallWriteRows", "262144").toLong)
-      df.coalesce(1)
-    else df.repartitionByRange(col("repo"), col("path"))
+  /** `df` projected onto the `evolved` lake schema (a column `df` lacks
+    * reads as null — a base key-column scan carries only repo, path,
+    * seq and commit) plus the merge aggregate's flags: `_op` (the
+    * change's op, `UPDATE` for a base row), `_isChange` and `_isData`
+    * (a base data row vs a base delete entry; only the merge-on-read
+    * aggregate reads it). */
+  private def conform(df: DataFrame, evolved: StructType, isChange: Boolean,
+      isData: Boolean = true): DataFrame =
+    df.select(evolved.fields.toSeq.map { f =>
+      (if (df.columns.contains(f.name)) col(f.name).cast(f.dataType)
+      else lit(null).cast(f.dataType)).as(f.name)
+    } ++ Seq(
+      (if (isChange && df.columns.contains("op")) col("op") else lit(Op.Update)).as("_op"),
+      lit(isChange).as("_isChange"), lit(isData).as("_isData")): _*)
 
   // ---- 5+6 (copy-on-write): union touched-file rows with the batch,
   // ONE LWW hash-agg (no join, one shuffle; subsumes in-batch dedup),
   // rewrite touched files range-clustered, retain the rest by
   // reference. Touched merge-on-read delete files are never rewritten
-  // here — they stay retained until a major compaction folds them. ----
+  // here — they stay retained until a major compaction folds them.
+  // Returns (retained files, written files, rowsBefore, rowsAfter). ----
   private def cowMerge(fenced: DataFrame, snap: Option[lake.Snapshot],
       evolved: StructType, touched: Seq[lake.FileEntry],
-      retained: Seq[lake.FileEntry], batchId: String,
-      newOffsets: Map[String, Long], upserts: Long, deletes: Long,
-      parsedCount: Long, quarantinedCount: Long,
-      lineageExtras: () => Map[String, Long]): Long = {
+      retained: Seq[lake.FileEntry], batchId: String, upserts: Long)
+      : (Seq[lake.FileEntry], Seq[lake.FileEntry], Long, Long) = {
     val touchedData = touched.filter(_.kind == "data")
-    def conform(df: DataFrame, isChange: Boolean): DataFrame = {
-      val cols = evolved.fields.toSeq.map { f =>
-        if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      } ++ Seq(
-        (if (isChange && df.columns.contains("op")) col("op") else lit(Op.Update)).as("_op"),
-        lit(isChange).as("_isChange"))
-      df.select(cols: _*)
-    }
     // base rows resolve any merge-on-read deletes FIRST (a raw scan
     // would resurrect superseded versions into the merge) and map
     // renamed columns (pre-rename files must not read as null)
@@ -293,13 +276,12 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
       if (touchedData.isEmpty) None
       else Some(lake.resolveDeletes(
         lake.readDataFiles(touchedData,
-          StructType(evolved.fields.map(f =>
-            StructField(f.name, f.dataType, nullable = true))),
+          StructType(evolved.fields.map(f => StructField(f.name, f.dataType, nullable = true))),
           snap.map(_.renames).getOrElse(Map.empty)),
         snap.get, scanned = Some(touchedData)))
-    val unioned = base.map(b => conform(b, isChange = false)
-      .unionByName(conform(fenced, isChange = true)))
-      .getOrElse(conform(fenced, isChange = true))
+    val changes = conform(fenced, evolved, isChange = true)
+    val unioned = base.map(b => conform(b, evolved, isChange = false).unionByName(changes))
+      .getOrElse(changes)
     val valueNames = evolved.fieldNames.toSeq.filterNot(keyCols.contains)
     val merged = unioned.groupBy(keyCols.map(col): _*)
       .agg(max_by(struct((valueNames :+ "_op").map(col) :+ col("_isChange"): _*),
@@ -308,9 +290,8 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
       .select(keyCols.map(col) ++ valueNames.map(c => col(s"r.$c").as(c)): _*)
     // merged rows ≤ touched base rows + batch upserts — both already on
     // the driver (manifest stats + the fused stats job)
-    val newFiles = lake.writeDataFiles(
-      clusterForWrite(merged, touchedData.map(_.rows).sum + upserts),
-      f"b$batchId%s-v")
+    val newFiles = lake.writeDataFiles(merged, f"b$batchId%s-v",
+      rowBound = touchedData.map(_.rows).sum + upserts, files = clusterPartitions)
     // delete files are kept whether touched or not (their entries may
     // target untouched files' rows)
     val keep = retained ++ touched.filter(_.kind == "delete")
@@ -319,14 +300,7 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
     // until the next major compaction
     val rowsBefore = snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L)
     val rowsAfter = (keep ++ newFiles).filter(_.kind == "data").map(_.rows).sum
-    lake.commit(batchId, newOffsets, evolved, keep, newFiles, Map(
-      "parsed" -> parsedCount, "quarantined" -> quarantinedCount,
-      "upserts" -> upserts, "deletes" -> deletes,
-      "rowsBefore" -> rowsBefore, "rowsAfter" -> rowsAfter) ++ lineageExtras(),
-      // anchor the commit's rewrite intent to the snapshot this batch
-      // READ (merged base rows from) — a concurrent maintenance commit
-      // between that read and this commit rebases instead of clobbering
-      baseVersion = snap.map(_.version))
+    (keep, newFiles, rowsBefore, rowsAfter)
   }
 
   // ---- 5+6 (merge-on-read): decide true LWW winners from the KEY
@@ -335,57 +309,36 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
   // the winning rows plus key-only equality-delete entries; nothing is
   // rewritten. Existing delete entries and DELETE tombstones participate
   // as base VERSIONS so a stale event can neither resurrect a deleted
-  // key nor shadow a newer base row. ----
+  // key nor shadow a newer base row. Returns (retained files, written
+  // files, rowsBefore, rowsAfter). ----
   private def morMerge(fenced: DataFrame, snap: Option[lake.Snapshot],
       evolved: StructType, touched: Seq[lake.FileEntry], batchId: String,
-      newOffsets: Map[String, Long], upserts: Long, deletes: Long,
-      parsedCount: Long, quarantinedCount: Long,
-      lineageExtras: () => Map[String, Long],
-      semiJoinBase: Boolean = true): Long = {
+      batchEvents: Long): (Seq[lake.FileEntry], Seq[lake.FileEntry], Long, Long) = {
     val valueNames = evolved.fieldNames.toSeq.filterNot(keyCols.contains)
-    val keyColsSet = Set("repo", "path", "seq", "commit")
-    def conformChange(df: DataFrame): DataFrame = {
-      val cols = evolved.fields.toSeq.map { f =>
-        if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      } ++ Seq(
-        (if (df.columns.contains("op")) col("op") else lit(Op.Update)).as("_op"),
-        lit(true).as("_isChange"), lit(true).as("_isData"))
-      df.select(cols: _*)
-    }
-    def conformBase(df: DataFrame, isData: Boolean): DataFrame = {
-      val cols = evolved.fields.toSeq.map { f =>
-        if (keyColsSet.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      } ++ Seq(lit(null).cast("string").as("_op"),
-        lit(false).as("_isChange"), lit(isData).as("_isData"))
-      df.select(cols: _*)
-    }
     // base versions are only consulted for keys THIS batch changes — for
-    // a SPARSE batch (`semiJoinBase`, decided by the caller from batch
-    // event count vs table rows), semi-join the key-column scans to the
-    // batch's key set before the merge aggregate, so a drizzle batch
-    // aggregates O(batch) base rows, not every key in every touched
+    // a SPARSE batch (batch events vs table rows, both already known:
+    // event counts from the fused stats job, table rows from the
+    // manifest), semi-join the key-column scans to the batch's key set
+    // before the merge aggregate, so a drizzle batch aggregates
+    // O(batch) base rows, not every key in every touched
     // file; AQE broadcasts the small key set. For a BULK batch the
     // semi-join's own distinct+probe cost exceeds what it saves
     // (measured +45% on a whole-keyspace 2M-row batch), so it is
     // skipped and the aggregate's map-side combine does the work.
+    val semiJoinBase = batchEvents * 8 < snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L)
     val batchKeys = fenced.select(col("repo"), col("path")).distinct()
-    def readKeyCols(fs: Seq[lake.FileEntry]) = {
-      // manifest-backed scan (zero listing calls per micro-batch — at
-      // 10^6 batches the per-batch planning RPCs ARE the throughput)
-      val base = lake.readEntries(fs, LakeTable.deleteSchema)
-      if (semiJoinBase) base.join(batchKeys, Seq("repo", "path"), "left_semi")
-      else base
-    }
-    val touchedData = touched.filter(_.kind == "data")
-    val touchedDel = touched.filter(_.kind == "delete")
-    val parts: Seq[DataFrame] =
-      Seq(conformChange(fenced)) ++
-        (if (touchedData.nonEmpty)
-          Seq(conformBase(readKeyCols(touchedData), isData = true)) else Nil) ++
-        (if (touchedDel.nonEmpty)
-          Seq(conformBase(readKeyCols(touchedDel), isData = false)) else Nil)
+    def baseVersions(fs: Seq[lake.FileEntry], isData: Boolean): Seq[DataFrame] =
+      if (fs.isEmpty) Nil
+      else {
+        // manifest-backed scan (zero listing calls per micro-batch — at
+        // 10^6 batches the per-batch planning RPCs ARE the throughput)
+        val keys = lake.readEntries(fs, LakeTable.deleteSchema)
+        Seq(conform(if (semiJoinBase) keys.join(batchKeys, Seq("repo", "path"), "left_semi")
+          else keys, evolved, isChange = false, isData = isData))
+      }
+    val parts = conform(fenced, evolved, isChange = true) +:
+      (baseVersions(touched.filter(_.kind == "data"), isData = true) ++
+        baseVersions(touched.filter(_.kind == "delete"), isData = false))
     // ONE hash aggregate over (changes ∪ base versions): the best change
     // row (in-batch LWW — _isChange leads the ordering so a change is
     // picked whenever one exists) and the best base VERSION, where a
@@ -406,25 +359,25 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
     val actionable = col("hasChange") && (col("bmax").isNull ||
       struct(col("w.seq").as("s"), col("w.commit").as("c")) >
         struct(col("bmax.s").as("s"), col("bmax.c").as("c")))
-    // O(batch winners) — PERSISTED because the range-clustered write
+    // O(batch winners) — PERSISTED because a range-clustered write
     // SAMPLES its input (RangePartitioner runs a full pass over the
     // child before the write pass) and the union below reads `act` from
     // two branches: without the cache the whole merge — base key-column
     // scan + shuffle + aggregate — would execute per consumer.
     val act = merged.filter(actionable)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ONE write job for both outputs, partitioned by kind: data rows
+    val written = try {
+      // ONE write job for both outputs, partitioned by `_kind`: data rows
       // (winners that live) ∪ key-only equality-delete entries (for keys
       // where some base version existed — a brand-new key has nothing to
       // supersede; the entry carries the WINNING (seq, commit) so
       // strictly-older versions die at read). The delete partition is
-      // SUBDIVIDED by whether a live base row existed ('dlive' — a bare
-      // tombstone supersession is 'dtomb'), so the exact newLive/oldLive
-      // counters for the lineage chain fall out of the written files'
-      // footer stats — the separate count aggregate (one full action per
-      // micro-batch) is gone; per-micro-batch fixed cost is what
-      // sustained throughput is made of.
+      // SUBDIVIDED by whether a live base row existed ('delete-live' — a
+      // bare tombstone supersession is 'delete-tomb'; file names carry
+      // the group, so they still name the manifest kind), so the exact
+      // newLive/oldLive counters for the lineage chain fall out of the
+      // written files' footer stats — no separate count action per
+      // micro-batch.
       val dataPart = act.filter(col("w._op") =!= Op.Delete)
         .select(keyCols.map(col) ++ valueNames.map(c => col(s"w.$c").as(c)) :+
           lit("data").as("_kind"): _*)
@@ -432,30 +385,24 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
         .select(keyCols.map(col) ++ valueNames.map { c =>
           if (c == "seq" || c == "commit") col(s"w.$c").as(c)
           else lit(null).cast(evolved(c).dataType).as(c)
-        } :+ when(col("bmax.d"), lit("dlive")).otherwise(lit("dtomb")).as("_kind"): _*)
-      // written rows ≤ 2 × batch keys ≤ 2 × (upserts + deletes): every
-      // output row (data winner or delete entry) maps to a batch key
-      val entriesKinded = lake.writeDataFilesKinded(
-        clusterForWrite(dataPart.unionByName(delPart),
-          2 * (upserts + deletes)),
-        f"b$batchId%s-m", blooms = false, partitionCol = Some("_kind"),
-        kindMap = k => if (k == "data") "data" else "delete")
-      val entries = entriesKinded.map(_._2)
-      // dataPart's filter drops null-op winners (null =!= 'DELETE' is
-      // null), so its row total is exactly the old newLive counter
-      val newLive = entriesKinded.filter(_._1 == "data").map(_._2.rows).sum
-      val oldLive = entriesKinded.filter(_._1 == "dlive").map(_._2.rows).sum
-      // live-count chain: previous commit's exact rowsAfter (file sums
-      // would count superseded versions still sitting in MoR files)
-      val rowsBefore = snap.map(s =>
-        s.lineage.getOrElse("rowsAfter", s.dataFiles.map(_.rows).sum)).getOrElse(0L)
-      val rowsAfter = rowsBefore + newLive - oldLive
-      lake.commit(batchId, newOffsets, evolved,
-        retain = snap.map(_.files).getOrElse(Nil), added = entries,
-        Map("parsed" -> parsedCount, "quarantined" -> quarantinedCount,
-          "upserts" -> upserts, "deletes" -> deletes,
-          "rowsBefore" -> rowsBefore, "rowsAfter" -> rowsAfter) ++ lineageExtras(),
-        baseVersion = snap.map(_.version))
+        } :+ when(col("bmax.d"), lit("delete-live")).otherwise(lit("delete-tomb"))
+          .as("_kind"): _*)
+      // written rows ≤ 2 × batch keys ≤ 2 × batch events: every output
+      // row (data winner or delete entry) maps to a batch key
+      lake.writeDataFiles(dataPart.unionByName(delPart), f"b$batchId%s-m",
+        rowBound = 2 * batchEvents, files = clusterPartitions, blooms = false,
+        partitionCol = Some("_kind"))
     } finally { act.unpersist(); () }
+    // dataPart's filter drops null-op winners (null =!= 'DELETE' is
+    // null), so its row total is exactly the old newLive counter
+    val newLive = written.filter(_.kind == "data").map(_.rows).sum
+    val oldLive = written.filter(_.kind == "delete-live").map(_.rows).sum
+    // live-count chain: previous commit's exact rowsAfter (file sums
+    // would count superseded versions still sitting in MoR files)
+    val rowsBefore = snap.map(s =>
+      s.lineage.getOrElse("rowsAfter", s.dataFiles.map(_.rows).sum)).getOrElse(0L)
+    (snap.map(_.files).getOrElse(Nil),
+      written.map(e => if (e.kind == "data") e else e.copy(kind = "delete")),
+      rowsBefore, rowsBefore + newLive - oldLive)
   }
 }

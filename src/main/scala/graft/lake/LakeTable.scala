@@ -320,148 +320,105 @@ class LakeTable(val root: String, spark: SparkSession,
 
   // ---- write ----------------------------------------------------------
 
-  /** Write a DataFrame as new immutable data files (sorted within
-    * partitions by key so per-file min/max stats are tight), returning
-    * manifest entries with stats.
+  /** The lake's one writer: lay `df` out, write it as new immutable
+    * data files, and return their manifest entries with footer stats.
     *
-    * Stats come from the parquet FOOTERS (row counts + repo/path column
-    * min/max), not from re-reading the data \u2014 a metadata-only pass, the
-    * same trick Iceberg manifests use. The footer reads run as one small
-    * TASK-SIDE job over the file list (executors each open a handful of
-    * footers), so commit latency stays flat as the per-batch output-file
-    * count grows; the driver's only per-file work is the rename into
-    * `data/` (a metadata op). Iceberg collects stats in its write tasks
-    * for the same reason.
+    * Layout — the single clustering policy every lake write goes
+    * through. A KEYED frame (`repo` and `path` columns) is
+    *  - range-partitioned into exactly `files` partitions when the
+    *    caller pins a file count (`files > 0`; AQE does not coalesce a
+    *    user-specified partition count);
+    *  - else `coalesce(1)` when `rowBound` (an upper bound on the
+    *    output's rows the caller knows from manifest or batch stats;
+    *    `Long.MaxValue` = unknown) is at or below
+    *    `spark.graft.smallWriteRows` (default 262144 — one write task
+    *    sorting ≲100 MB). One partition is trivially range-disjoint and
+    *    keeps tight key stats, and it skips the RangePartitioner's
+    *    SAMPLING pass, which executes the whole input subtree one extra
+    *    time (callers persist an expensive input before writing it);
+    *  - else range-partitioned on (repo, path) with AQE sizing the
+    *    partitions to its advisory byte target.
+    * Either way each file gets a tight, disjoint key range, so manifest
+    * pruning keeps later copy-on-write merges and point reads
+    * proportional to what they touch. KEYLESS frames (e.g. the
+    * quarantine sink's (raw, errors, stage) rows) are written as they
+    * come, unsorted and without blooms; their stats degrade to the
+    * full-range sentinels and reads of them are always full scans.
     *
-    * Filesystem contract: the task-side footer job requires that
-    * EXECUTORS can open the staged files \u2014 true for any shared
-    * filesystem (HDFS/S3/NFS) and for local mode. When the table root is
-    * a bare `file:` path AND executors are remote (a real cluster
-    * without a shared mount), tasks could not see the driver's local
-    * disk, so the footer reads fall back to a driver-side loop \u2014 the
-    * same stats, collected where the files are visible. */
-  def writeDataFiles(df: DataFrame, label: String, kind: String = "data",
-      blooms: Boolean = true, partitionCol: Option[String] = None)
-      : Seq[FileEntry] =
-    writeDataFilesKinded(df, label, kind, blooms, partitionCol, identity)
-      .map(_._2)
-
-  /** [[writeDataFiles]] with a partition-value → manifest-kind mapping,
-    * returning (raw partition value, entry) pairs: lets a caller write
-    * SUBDIVIDED partitions in one job (e.g. the MoR merge splitting
-    * delete entries by had-live-base-row) and read the per-subdivision
-    * row counts straight from the footer stats — no separate count
-    * action over the merge output. */
-  private[graft] def writeDataFilesKinded(df: DataFrame, label: String,
-      kind: String = "data", blooms: Boolean = true,
-      partitionCol: Option[String] = None,
-      kindMap: String => String = identity): Seq[(String, FileEntry)] = {
-    // no leading '_' \u2014 Spark's file listing filters _-prefixed paths
+    * Stats come from the parquet FOOTERS (row counts, repo/path/seq
+    * min/max, file bytes), not from re-reading the data — a
+    * metadata-only pass, the same trick Iceberg manifests use. The
+    * driver reads each footer in the loop that already lists and
+    * renames every staged file into `data/`, so the stats cost no Spark
+    * job. A staged 0-row file (Spark stages one for an empty
+    * `coalesce(1)` write) is never moved: it goes away with the stage
+    * dir, and no entry names it.
+    *
+    * `partitionCol` lets ONE write job emit several file groups: output
+    * lands in `<col>=<value>/` subdirs and each entry's `kind` is its
+    * subdir value — the merge-on-read applier splits its output into
+    * data and delete-entry groups this way and maps the values to
+    * manifest kinds itself. Without it every entry gets `kind`. */
+  def writeDataFiles(df: DataFrame, label: String, rowBound: Long = Long.MaxValue,
+      files: Int = 0, kind: String = "data", blooms: Boolean = true,
+      partitionCol: Option[String] = None): Seq[FileEntry] = {
+    // no leading '_' — Spark's file listing filters _-prefixed paths
     val tmp = Paths.get(root, s"stage-$label")
-    // KEYLESS tables (e.g. the quarantine sink's (raw, errors, stage)
-    // rows) skip the key sort and blooms \u2014 their footer stats degrade to
-    // the full-range sentinels and reads are always full scans
     val hasKeys = df.columns.contains("repo") && df.columns.contains("path")
-    val sorted = (if (hasKeys) df.sortWithinPartitions("repo", "path") else df)
+    val laidOut =
+      if (!hasKeys) df
+      else if (files > 0) df.repartitionByRange(files, col("repo"), col("path"))
+      else if (rowBound <= spark.conf.get("spark.graft.smallWriteRows", "262144").toLong)
+        df.coalesce(1)
+      else df.repartitionByRange(col("repo"), col("path"))
+    val sorted = (if (hasKeys) laidOut.sortWithinPartitions("repo", "path") else laidOut)
       .write.mode("overwrite")
     // parquet bloom filters on the key columns: row-group-level point
     // pruning INSIDE files, the layer below the manifest's min/max
     // ranges — a key equality scan ([[lookupKeys]]) skips row groups
     // whose bloom says "definitely absent" without reading data pages.
-    // Sorted-on-write files have tight ranges already; blooms cover the
-    // residual case of a wide file whose range straddles the probe key.
-    // Adaptive sizing flushes a bloom sized to the chunk's observed NDV
-    // rather than the 1 MB max-bytes bitset; even adaptive, parquet's
-    // smallest candidate is 64 KB per column — so callers producing
-    // SMALL short-lived files (merge-on-read micro-batch output, folded
-    // away at the next major compaction) pass `blooms = false`: a
-    // constant 128 KB per file would dominate exactly the write
-    // amplification MoR exists to bound, while wide long-lived files
-    // (CoW merges, compaction rewrites) keep full bloom coverage.
+    // Adaptive sizing flushes a bloom sized to the chunk's observed NDV,
+    // but parquet's smallest candidate is still 64 KB per column — so
+    // callers producing SMALL short-lived files (merge-on-read
+    // micro-batch output, folded away at the next major compaction) pass
+    // `blooms = false`, while wide long-lived files (CoW merges,
+    // compaction rewrites) keep full bloom coverage.
     val writer =
       if (!blooms || !hasKeys) sorted
       else sorted
         .option("parquet.bloom.filter.enabled#repo", "true")
         .option("parquet.bloom.filter.enabled#path", "true")
         .option("parquet.bloom.filter.adaptive.enabled", "true")
-    // partitionCol (e.g. the merge-on-read writer's `_kind`) lets ONE
-    // write job emit files of several kinds: output lands in
-    // `<col>=<value>/` subdirs, each file's kind = its subdir value
     partitionCol.map(writer.partitionBy(_)).getOrElse(writer).parquet(tmp.toString)
-    def listParquet(dir: Path): Seq[Path] = {
+    def list(dir: Path): Seq[Path] = {
       val ls = Files.list(dir)
-      try ls.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-      finally ls.close()
+      try ls.iterator().asScala.toSeq.sortBy(_.toString) finally ls.close()
     }
-    val partsKinded: Seq[(Path, String)] = partitionCol match {
-      case None => listParquet(tmp).map(p => (p, kind))
+    val staged: Seq[(Path, String)] = partitionCol match {
+      case None => list(tmp).map((_, kind))
       case Some(c) =>
-        val ls = Files.list(tmp)
-        val subdirs = try ls.iterator().asScala
-          .filter(d => Files.isDirectory(d) && d.getFileName.toString.startsWith(s"$c="))
-          .toSeq.sortBy(_.toString)
-          finally ls.close()
-        subdirs.flatMap { d =>
-          val k = d.getFileName.toString.stripPrefix(s"$c=")
-          listParquet(d).map(p => (p, k))
+        list(tmp).filter(d => Files.isDirectory(d) && d.getFileName.toString.startsWith(s"$c="))
+          .flatMap(d => list(d).map((_, d.getFileName.toString.stripPrefix(s"$c="))))
+    }
+    val conf = spark.sessionState.newHadoopConf()
+    val entries = staged.filter(_._1.getFileName.toString.endsWith(".parquet"))
+      .zipWithIndex.flatMap { case ((src, k), i) =>
+        val (rows, minR, maxR, minP, maxP, minS, maxS, bytes) = LakeTable.footerStats(src, conf)
+        if (rows == 0) None
+        else {
+          val name = s"$label-$k-${"%05d".format(i)}-${src.getFileName.toString.stripPrefix("part-").take(41)}"
+          Files.move(src, dataDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+          Some(FileEntry(s"data/$name", rows, minR, maxR, s"$minR $minP", s"$maxR $maxP",
+            minS, maxS, k, bytes))
         }
-    }
-    val parts = partsKinded.map(_._1)
-    // local-path staging is only task-visible when executors share the
-    // driver's filesystem (local mode, or a mounted FS); remote
-    // executors + a plain file: root → collect stats driver-side.
-    // Small file counts also stay driver-side even when tasks could do
-    // it: a footer read is a few ms of metadata IO, and the distributed
-    // path pays a full Spark job (repartition + collect) of fixed
-    // latency per write — at micro-batch cadence that job IS the cost.
-    // The task-side path remains for wide writes (compactions, bulk
-    // batches producing many files).
-    val localOnlyStage = tmp.toUri.getScheme == "file" || tmp.toUri.getScheme == null
-    val taskSide = (spark.sparkContext.isLocal || !localOnlyStage) &&
-      parts.size > spark.sparkContext.defaultParallelism
-    val stats: Map[String, (Long, String, String, String, String, Long, Long, Long)] =
-      if (parts.isEmpty) Map.empty
-      else if (!taskSide) {
-        val conf = spark.sessionState.newHadoopConf()
-        parts.map(p => p.toString -> LakeTable.footerStats(p, conf)).toMap
-      } else {
-        import spark.implicits._
-        // ship the session's Hadoop conf (FS credentials) to the tasks
-        val confBc = spark.sparkContext.broadcast(new org.apache.spark.SerializableWritable(
-          spark.sessionState.newHadoopConf()))
-        val n = math.max(1, math.min(parts.size, spark.sparkContext.defaultParallelism))
-        val rows = spark.createDataset(parts.map(_.toString))
-          .repartition(n)
-          .mapPartitions { it =>
-            val conf = confBc.value.value
-            it.map { p =>
-              val (rws, minR, maxR, minP, maxP, minS, maxS, bytes) =
-                LakeTable.footerStats(Paths.get(p), conf)
-              (p, rws, minR, maxR, minP, maxP, minS, maxS, bytes)
-            }
-          }.collect()
-        confBc.unpersist()
-        rows.map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._6, r._7, r._8, r._9))).toMap
       }
-    val entries = partsKinded.zipWithIndex.map { case ((src, k), i) =>
-      val (rows, minR, maxR, minP, maxP, minS, maxS, bytes) = stats(src.toString)
-      // the public file name carries the MANIFEST kind (raw partition
-      // values like dlive/dtomb are an internal counting detail)
-      val name = s"$label-${kindMap(k)}-${"%05d".format(i)}-${src.getFileName.toString.stripPrefix("part-").take(41)}"
-      val dst = dataDir.resolve(name)
-      Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-      (k, FileEntry(s"data/$name", rows, minR, maxR, s"$minR $minP", s"$maxR $maxP",
-        minS, maxS, kindMap(k), bytes))
-    }
-    // clean tmp dir remnants (_SUCCESS etc.)
+    // drop the stage dir with its remnants (_SUCCESS, 0-row files, …)
     val w = Files.walk(tmp)
     try w.sorted(java.util.Comparator.reverseOrder[Path]())
       .iterator().asScala.foreach(p => Try(Files.delete(p)))
     finally w.close()
-    entries.filter(_._2.rows > 0)
+    entries
   }
-
 
   /** Atomically commit a new snapshot: keep `retain`, add `added`, drop
     * everything else. Returns the committed version, or the existing one
@@ -564,18 +521,15 @@ class LakeTable(val root: String, spark: SparkSession,
     * snapshot. At 100 TB this is the job that keeps CoW MERGE cheap:
     * file count bounds both manifest size and merge read amplification.
     *
-    * Output sizing — always a RANGE repartition on (repo, path), the same
-    * clustering as the applier's write path, so compacted files keep
-    * tight disjoint key ranges and file pruning stays effective:
-    *  - `shufflePartitions = 0` (default): AQE sizes the range partitions
-    *    to its advisory byte target — a whole-table compact is a parallel
-    *    many-file rewrite, never a one-task funnel;
-    *  - `shufflePartitions > 0`: pinned output file count (AQE does not
-    *    coalesce a user-specified partition count);
-    *  - `singleFile = true`: explicit `coalesce(1)` for a KNOWN-tiny
-    *    table (the only case where one task is the right plan). */
+    * Output layout is [[writeDataFiles]]'s one policy, fed the rewrite's
+    * manifest-known row total: a small rewrite lands in one file, a
+    * large one is range-clustered on (repo, path) with AQE sizing the
+    * files (a whole-table compact is a parallel many-file rewrite, never
+    * a one-task funnel), and `shufflePartitions > 0` pins the output
+    * file count. Either way compacted files keep tight disjoint key
+    * ranges, so file pruning stays effective. */
   def compact(minRows: Long, shufflePartitions: Int = 0,
-      singleFile: Boolean = false, minBytes: Long = 0L): Option[Long] = {
+      minBytes: Long = 0L): Option[Long] = {
     val snap = currentSnapshot.getOrElse(return None)
     val major = snap.deleteFiles.nonEmpty
     // byte-targeted selection uses the manifest-recorded file sizes —
@@ -617,20 +571,8 @@ class LakeTable(val root: String, spark: SparkSession,
     // rent-paying moment after which the rename mapping is inert
     val raw = readDataFiles(small, snap.schema, snap.renames)
     val df = if (major) resolveDeletes(raw, snap, scanned = Some(small)) else raw
-    // range-cluster (not hash): compacted files get tight disjoint key
-    // ranges, which is what keeps future CoW merges cheap. SMALL rewrites
-    // (total rows known from the manifest) take coalesce(1): one
-    // partition is trivially range-disjoint, writeDataFiles sorts it, and
-    // the RangePartitioner's sampling pass — one extra execution of the
-    // whole resolve subtree — is skipped.
-    val sized =
-      if (shufflePartitions > 0) // explicit file-count pin always wins
-        df.repartitionByRange(shufflePartitions, col("repo"), col("path"))
-      else if (singleFile || small.map(_.rows).sum <=
-          spark.conf.get("spark.graft.smallWriteRows", "262144").toLong)
-        df.coalesce(1)
-      else df.repartitionByRange(col("repo"), col("path"))
-    val added = writeDataFiles(sized, s"compact-v${snap.version + 1}")
+    val added = writeDataFiles(df, s"compact-v${snap.version + 1}",
+      rowBound = small.map(_.rows).sum, files = shufflePartitions)
     Some(commit(s"compact-${snap.version + 1}", Map.empty, snap.schema, keep, added,
       Map("compactedFiles" -> (small.size + (if (major) snap.deleteFiles.size else 0)).toLong,
         "rowsAfter" -> (keep ++ added).filter(_.kind == "data").map(_.rows).sum),
@@ -669,18 +611,11 @@ class LakeTable(val root: String, spark: SparkSession,
       // delete aggregate runs once, not once per pass
       .persist()
     try {
-      // delete-entry total is manifest-known: small consolidations skip
-      // the RangePartitioner sampling pass via coalesce(1) (sorted +
-      // trivially range-disjoint, like the applier's small-batch path)
-      val sized =
-        if (dels.map(_.rows).sum <=
-            spark.conf.get("spark.graft.smallWriteRows", "262144").toLong)
-          merged.coalesce(1)
-        else merged.repartitionByRange(col("repo"), col("path"))
       // blooms off: like MoR micro-batch output, delete files are always
-      // scanned whole by resolveDeletes, never point-probed
-      val added = writeDataFiles(sized, s"deletes-v${snap.version + 1}",
-        kind = "delete", blooms = false)
+      // scanned whole by resolveDeletes, never point-probed; the
+      // manifest-known delete-entry total bounds the output rows
+      val added = writeDataFiles(merged, s"deletes-v${snap.version + 1}",
+        rowBound = dels.map(_.rows).sum, kind = "delete", blooms = false)
       Some(commit(s"consolidate-deletes-${snap.version + 1}", Map.empty,
         snap.schema, snap.dataFiles, added,
         Map("consolidatedDeleteFiles" -> dels.size.toLong,
@@ -1389,8 +1324,7 @@ object LakeTable {
 
   /** Row count + (repo, path) string min/max + seq long min/max + file
     * BYTES from a parquet footer open (the open already knows the length
-    * — no extra status call). Static so write-job TASKS can call it
-    * without capturing a table instance (executor-side stat collection). */
+    * — no extra status call). */
   private[lake] def footerStats(p: Path, conf: org.apache.hadoop.conf.Configuration)
       : (Long, String, String, String, String, Long, Long, Long) = {
     import org.apache.parquet.hadoop.ParquetFileReader

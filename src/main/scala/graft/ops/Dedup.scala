@@ -52,14 +52,6 @@ object Dedup {
         pmod(p.getField("a") * (h * 2 + 1) + p.getField("b"), lit(MinhashM)))))
   }
 
-  /** LSH banding: split the signature into `bands` equal bands, hash each
-    * to a bucket key. Docs sharing any (band, bucket) are candidates. */
-  def lshBuckets(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(b.as("band"),
-        md5(concat_ws("|", transform(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)),
-          x => x.cast("string")))).as("bucket")))
-
   /** Full MinHash+LSH near-dup candidate pairs with exact-Jaccard verify.
     * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
     *

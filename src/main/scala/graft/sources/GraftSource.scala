@@ -101,8 +101,11 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
     * `convert_to_parquet.py:236-238`, with a commit fence instead of
     * bare files):
     *
-    *  - files are range-clustered on (repo, path) when those columns
-    *    exist, so manifest pruning works on what this path writes;
+    *  - files go through the lake's one writer
+    *    ([[LakeTable.writeDataFiles]]): range-clustered on (repo, path)
+    *    when those columns exist (the sink knows no row bound, so only
+    *    a `spark.graft.smallWriteRows` of `Long.MaxValue` sends it to
+    *    one file), so manifest pruning works on what this path writes;
     *  - the commit is the same optimistic atomic-rename loop the applier
     *    uses — concurrent writers rebase, a torn write is invisible
     *    (files without a manifest are vacuumable orphans);
@@ -144,9 +147,6 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
       case _ => true
     }
     if (proceed) {
-      val keyed = data.columns.contains("repo") && data.columns.contains("path")
-      val clustered =
-        if (keyed) data.repartitionByRange(col("repo"), col("path")) else data
       val batchId = ci.getOrElse("batchid",
         s"save-${java.util.UUID.randomUUID().toString.take(12)}")
       val sticky = ci.get("stickybatchid").exists(_.toBoolean)
@@ -156,7 +156,7 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
       val replayed = head.exists(h => h.applied.get(batchId).contains("") ||
         h.saved.get(batchId).contains(""))
       if (!replayed) {
-        val added = lake.writeDataFiles(clustered, batchId)
+        val added = lake.writeDataFiles(data, batchId)
         mode match {
           case SaveMode.Overwrite =>
             lake.commit(batchId, Map.empty, data.schema, Nil, added,

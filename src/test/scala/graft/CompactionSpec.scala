@@ -48,6 +48,19 @@ class CompactionSpec extends AnyFunSuite {
     assert(lake.committedOffsets == lake.snapshot(vPre).offsets)
   }
 
+  /** A range-clustered write: several files whose per-file REPO ranges
+    * are pairwise disjoint up to the boundary repo (a repo may straddle
+    * a range boundary, split on path; the composite minKey/maxKey stats
+    * are per-column bounds and thus conservative). */
+  private def assertRangeClustered(what: String, files: Seq[LakeTable#FileEntry]): Unit = {
+    assert(files.size > 1, s"$what: expected a multi-file write, got ${files.size}")
+    files.sortBy(_.minRepo).sliding(2).foreach {
+      case Seq(a, b) => assert(a.maxRepo <= b.minRepo,
+        s"$what: overlapping repo ranges: ${a.maxRepo} > ${b.minRepo}")
+      case _ => ()
+    }
+  }
+
   test("whole-table compact is a parallel multi-file rewrite with disjoint key ranges") {
     val lake = new LakeTable(TestSpark.tmpDir("lakecompactmulti"), spark)
     val applier = new CdcApplier(lake, spark)
@@ -67,17 +80,7 @@ class CompactionSpec extends AnyFunSuite {
     // the assertion is about the PLAN SHAPE: a whole-table compact must
     // be able to write many files, never a forced one-task funnel
     assert(lake.compact(minRows = Long.MaxValue, shufflePartitions = 3).nonEmpty)
-    val files = lake.currentSnapshot.get.files
-    assert(files.size > 1, s"expected a multi-file compact, got ${files.size}")
-    // range clustering ⇒ per-file REPO ranges are disjoint up to the
-    // boundary repo (a repo may straddle a boundary, split on path; the
-    // composite minKey/maxKey stats are per-column and thus conservative)
-    val sorted = files.sortBy(_.minRepo)
-    sorted.sliding(2).foreach {
-      case Seq(a, b) => assert(a.maxRepo <= b.minRepo,
-        s"overlapping compacted repo ranges: ${a.maxRepo} > ${b.minRepo}")
-      case _ => ()
-    }
+    assertRangeClustered("whole-table compact", lake.currentSnapshot.get.files)
     val after = lake.read().select($"repo", $"path", sha2($"content", 256))
       .collect().map(_.toSeq).toSet
     assert(after == before)
@@ -166,5 +169,68 @@ class CompactionSpec extends AnyFunSuite {
     assert(finalSnap.deleteFiles.isEmpty)
     assert(lake.read().select($"repo", $"path", $"commit", $"content")
       .collect().map(_.toSeq).toSet == before)
+  }
+
+  test("one layout policy: at or below spark.graft.smallWriteRows a write is one file, above it range-clustered files") {
+    // each write path hands the writer its own output row bound; the
+    // threshold is set AT that bound (one file) and one row below it
+    // (range path). AQE partition coalescing is off so the range path
+    // shows its spark.sql.shuffle.partitions files on this tiny data.
+    def underThreshold[T](smallWriteRows: Long)(f: => T): T = {
+      spark.conf.set("spark.graft.smallWriteRows", smallWriteRows.toString)
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      try f finally {
+        spark.conf.unset("spark.graft.smallWriteRows")
+        spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+      }
+    }
+    def check(what: String, bound: Long)(write: => Seq[LakeTable#FileEntry]): Unit = {
+      val at = underThreshold(bound)(write)
+      assert(at.size == 1, s"$what at the threshold: expected one file, got ${at.size}")
+      assertRangeClustered(s"$what above the threshold", underThreshold(bound - 1)(write))
+    }
+    // 800 upserts over 100 keys: the CoW bound is touched base rows (none,
+    // fresh table) + upserts
+    val wide = (0 until 800).map { i =>
+      ("UPDATE", (i % 4).toString, f"lp-${(i * 37) % 100}%03d", s"p${i % 20}",
+        s"c$i", "scala", s"content-$i", i.toLong)
+    }.toDF("op", "part", "repo", "path", "commit", "lang", "content", "seq")
+    check("CoW apply", 800) {
+      val lake = new LakeTable(TestSpark.tmpDir("lpcow"), spark)
+      new CdcApplier(lake, spark).applyBatch(wide, "lp-0")
+      lake.currentSnapshot.get.files
+    }
+    // compaction's bound: the rewritten files' manifest row total
+    val rows = wide.select($"repo", $"path", $"commit", $"lang", $"content", $"seq")
+    check("compact", 800) {
+      val lake = new LakeTable(TestSpark.tmpDir("lpcompact"), spark)
+      lake.commit("lp-seed", Map.empty, rows.schema, Nil,
+        lake.writeDataFiles(rows, "lp-seed", files = 4))
+      assert(lake.compact(minRows = Long.MaxValue).nonEmpty)
+      lake.currentSnapshot.get.files
+    }
+    // consolidation's bound: the delete entries' row total — a seed of
+    // 40 keys, then three 20-key update batches (every updated key had a
+    // base version, so each batch writes 20 delete entries)
+    def drizzle(tag: String, seq0: Long, keys: Seq[Int]) = keys.map { k =>
+      ("UPDATE", "p0", f"lq-r$k%02d", s"p$k", s"c-$tag-$k", "scala", s"b-$tag-$k", seq0 + k)
+    }.toDF("op", "part", "repo", "path", "commit", "lang", "content", "seq")
+    check("consolidateDeletes", 60) {
+      val lake = new LakeTable(TestSpark.tmpDir("lpdel"), spark)
+      val mor = new CdcApplier(lake, spark, mergeOnRead = true)
+      mor.applyBatch(drizzle("seed", 0, 0 until 40), "lq-0")
+      Seq((1000L, 0 until 20), (2000L, 10 until 30), (3000L, 20 until 40)).foreach {
+        case (s0, ks) => mor.applyBatch(drizzle(s"u$s0", s0, ks), s"lq-$s0")
+      }
+      assert(lake.currentSnapshot.get.deleteFiles.map(_.rows).sum == 60)
+      assert(lake.consolidateDeletes().nonEmpty)
+      lake.currentSnapshot.get.deleteFiles
+    }
+    // the append sink knows no bound (Long.MaxValue)
+    check("format(graft) append", Long.MaxValue) {
+      val root = TestSpark.tmpDir("lpsink")
+      rows.write.format("graft").mode("append").save(root)
+      new LakeTable(root, spark).currentSnapshot.get.files
+    }
   }
 }

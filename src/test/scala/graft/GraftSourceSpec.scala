@@ -38,11 +38,9 @@ class GraftSourceSpec extends AnyFunSuite {
     val mx = ev.agg(max($"seq")).head().getLong(0)
     val lo = ev.filter($"seq" <= mx / 2)
     val hi = ev.filter($"seq" > mx / 2)
-    val f1 = lake.writeDataFiles(
-      lo.repartitionByRange(2, col("repo"), col("path")), "src-lo")
+    val f1 = lake.writeDataFiles(lo, "src-lo", files = 2)
     lake.commit("src-0", Map("p0" -> mx / 2), ev.schema, Nil, f1)
-    val f2 = lake.writeDataFiles(
-      hi.repartitionByRange(2, col("repo"), col("path")), "src-hi")
+    val f2 = lake.writeDataFiles(hi, "src-hi", files = 2)
     lake.commit("src-1", Map("p0" -> mx), ev.schema,
       lake.currentSnapshot.get.files, f2)
     lake

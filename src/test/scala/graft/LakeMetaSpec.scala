@@ -96,8 +96,7 @@ class LakeMetaSpec extends AnyFunSuite {
     val ev = ChangeLogGen.events(spark, 800, 31L)
       .filter(lower($"source") === "app.change.log")
       .select($"repo", $"path", $"commit", $"lang", $"content", $"seq")
-    val files = lake.writeDataFiles(
-      ev.repartitionByRange(3, col("repo"), col("path")), "bytes-0")
+    val files = lake.writeDataFiles(ev, "bytes-0", files = 3)
     lake.commit("bytes-0", Map("p0" -> 1L), ev.schema, Nil, files)
     val snap = lake.currentSnapshot.get
     // every entry carries its true on-disk size from the footer pass
@@ -126,10 +125,8 @@ class LakeMetaSpec extends AnyFunSuite {
     val ev = ChangeLogGen.events(spark, 3000, 37L)
       .filter(lower($"source") === "app.change.log")
       .select($"repo", $"path", $"commit", $"lang", $"content", $"seq")
-    val big = lake.writeDataFiles(ev.filter($"seq" % 4 =!= 0).coalesce(1), "bc-big")
-    val tiny = lake.writeDataFiles(
-      ev.filter($"seq" % 4 === 0).repartitionByRange(3, col("repo"), col("path")),
-      "bc-tiny")
+    val big = lake.writeDataFiles(ev.filter($"seq" % 4 =!= 0), "bc-big", files = 1)
+    val tiny = lake.writeDataFiles(ev.filter($"seq" % 4 === 0), "bc-tiny", files = 3)
     lake.commit("bc-0", Map("p0" -> 1L), ev.schema, Nil, big ++ tiny)
     val before = lake.currentSnapshot.get.dataFiles
     val bigBytes = big.map(_.bytes).max
@@ -270,10 +267,10 @@ class LakeMetaSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("task-side file stats: 64-file write commits with exact per-file stats") {
+  test("footer stats: 64-file write commits with exact per-file stats") {
     val lake = new LakeTable(TestSpark.tmpDir("lakestats64"), spark)
-    // pin 64 output files — stats for every file must come back from the
-    // executor-side footer job, not a per-file driver loop
+    // pin 64 output files — the driver's footer reads must return exact
+    // stats for every one of them
     val applier = new CdcApplier(lake, spark, clusterPartitions = 64)
     val wide = (0 until 6400).map { i =>
       ("UPDATE", (i % 4).toString, f"repo-${(i * 131) % 320}%03d", s"p${i % 20}",
@@ -546,7 +543,7 @@ class LakeMetaSpec extends AnyFunSuite {
       md5(concat(lit("x"), $"id".cast("string"))).as("path"), // 80k uniques > 1MB dict
       $"id".as("seq"))
     val bloomLake = new LakeTable(TestSpark.tmpDir("lakebloom"), spark)
-    val entries = bloomLake.writeDataFiles(hc.repartition(2), "bloom")
+    val entries = bloomLake.writeDataFiles(hc, "bloom", files = 2)
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val p = java.nio.file.Paths.get(bloomLake.root, entries.head.path)
